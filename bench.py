@@ -76,40 +76,14 @@ SF1_EXTRA = [
 
 
 def _prebuild_memos(spark, sf_dir: str) -> dict[str, float]:
-    """Build each shared memo (deterministic build-step intermediates)
-    and return {step: seconds}. Queries then all run memo-warm."""
-    from n2khab_mhq_data_spark.plans import graph, llm
+    """Build every registered build step (``plans.BUILD_STEPS``) and
+    return {step: build seconds}. Queries then all run step-warm."""
+    from n2khab_mhq_data_spark.plans import BUILD_STEPS
 
     steps = {}
-    t0 = time.time()
-    llm._near_pairs(spark, sf_dir).count()
-    steps["near_pairs"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._components(spark, sf_dir).count()
-    steps["components"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._bigram_lm(spark, sf_dir).count()
-    steps["bigram_lm"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    from n2khab_mhq_data_spark.plans import pipeline as pl
-
-    tf, dl = pl._bm25_index(spark, sf_dir)
-    tf.count()
-    steps["bm25_index"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._bpe_merges(spark, sf_dir)
-    steps["bpe_merges"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._kmeans_cents(spark, sf_dir)
-    steps["kmeans_cents"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    graph._copurchase_edges(spark, sf_dir).count()
-    steps["copurchase_edges"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    from n2khab_mhq_data_spark.plans import kernels as kn
-
-    kn._lsvi_levels(spark, sf_dir)["lsvi_globaal"].count()
-    steps["lsvi_levels"] = round(time.time() - t0, 3)
+    for name, step in BUILD_STEPS.items():
+        step(spark, sf_dir)
+        steps[name] = round(step.slots[sf_dir].seconds, 3)
     return steps
 
 

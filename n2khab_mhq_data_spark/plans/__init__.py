@@ -8,7 +8,10 @@ tables. ``__spark_entry__.queries()`` / ``oracle_sql()`` read these dicts.
 
 from __future__ import annotations
 
+import functools
+import time
 from collections.abc import Callable
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -17,11 +20,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 def parquet_fingerprint(sf_dir: str, table: str) -> tuple:
     """(path, mtime_ns, size) tuple over a source table's parquet
-    file(s) — the ONE memo-invalidation key recipe (was inlined as
-    _docs/_embeddings/_li/_lsvi fingerprints; regenerated data at the
-    same sf_dir must invalidate every build-step memo). Tolerates a file
-    vanishing between glob and stat (TOCTOU) by skipping it — the
-    changed listing itself already invalidates the key."""
+    file(s) — the ONE invalidation-key recipe for build steps and
+    scratch stores (regenerated data at the same sf_dir must invalidate
+    both). Tolerates a file vanishing between glob and stat (TOCTOU) by
+    skipping it — the changed listing itself already changes the key."""
     import glob
     import os
 
@@ -37,24 +39,69 @@ def parquet_fingerprint(sf_dir: str, table: str) -> tuple:
     return tuple(out)
 
 
-def evict_dead_sessions(memo: dict, spark: SparkSession) -> None:
-    """Drop every memo entry owned by ANOTHER SparkSession — a cached
-    localCheckpoint dies with its SparkContext, so entries from dead
-    sessions must be evicted wholesale, not just the key about to be
-    rebuilt (tests spin up multiple sessions per process). Values may be
-    DataFrames or containers whose first element/value is one."""
+class _Slot(NamedTuple):
+    spark: SparkSession
+    fingerprint: tuple
+    value: Any
+    seconds: float
 
-    def df_of(v):
-        if isinstance(v, dict):
-            v = next(iter(v.values()))
-        if isinstance(v, (tuple, list)):
-            v = v[0]
-        return v
 
-    for k in [
-        k for k, v in memo.items() if df_of(v).sparkSession is not spark
-    ]:
-        del memo[k]
+class BuildStep:
+    """One registered build step: the wrapped ``(spark, sf_dir)`` body
+    plus its slots, one per sf_dir (see ``build_step``)."""
+
+    def __init__(self, tables: tuple[str, ...], build):
+        functools.update_wrapper(self, build)
+        self.tables, self.build = tables, build
+        self.slots: dict[str, _Slot] = {}
+
+    def __call__(self, spark: SparkSession, sf_dir: str):
+        fp = tuple(parquet_fingerprint(sf_dir, t) for t in self.tables)
+        slot = self.slots.get(sf_dir)
+        if slot is None or slot.spark is not spark or slot.fingerprint != fp:
+            # drop the superseded value before rebuilding so its
+            # checkpoint blocks are unpinned while the new one builds
+            self.slots.pop(sf_dir, None)
+            t0 = time.perf_counter()
+            value = self.build(spark, sf_dir)
+            slot = self.slots[sf_dir] = _Slot(
+                spark, fp, value, time.perf_counter() - t0
+            )
+        return slot.value
+
+
+BUILD_STEPS: dict[str, BuildStep] = {}
+
+
+def build_step(name: str, *tables: str):
+    """Register a shared build step: a deterministic intermediate that
+    several queries consume (a near-dup pair table, a trained merge
+    table, the completed LSVI levels), built once per dataset and
+    session the way a real pipeline materializes it once, not per
+    consumer.
+
+    The body must return its value materialized — a localCheckpoint'ed
+    DataFrame (or a container of them) or a plain Python value — so a
+    reuse runs no Spark job; where to checkpoint is the body's call.
+    Every body is deterministic, so a reused value is bit-identical to a
+    rebuild.
+
+    One slot per ``(name, sf_dir)`` holds the owning SparkSession, the
+    ``parquet_fingerprint`` of the declared source ``tables`` and the
+    value. It is reused only when both match: regenerated data at the
+    same sf_dir changes the fingerprint, and a localCheckpoint dies with
+    the session that made it (tests spin up several per process). A
+    mismatch rebuilds into the same slot, so a superseded value is never
+    left pinned. The slot also records the build's wall seconds, which
+    bench.py reports per step as ``build_seconds``."""
+
+    def deco(build) -> BuildStep:
+        step = BUILD_STEPS[name] = BuildStep(tables, build)
+        return step
+
+    return deco
+
+
 ORACLES: dict[str, str] = {}
 
 

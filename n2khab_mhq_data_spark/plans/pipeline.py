@@ -12,7 +12,7 @@ from n2khab_mhq_data_spark.llmdata.pipeline import (
     pack_sequences,
     tfidf_topk,
 )
-from n2khab_mhq_data_spark.plans import query
+from n2khab_mhq_data_spark.plans import build_step, query
 
 
 @query(
@@ -125,32 +125,15 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_topk(load(spark, sf_dir, "documents"), "text", "doc_id", 3)
 
 
-# BM25 postings/doc-length memo — the materialized search index both
-# retrieval consumers (text_bm25_topk, sim_rrf_fusion's lexical leg)
-# share; same lifecycle as the near-dup pair memo (fingerprint-keyed,
-# dead-session entries evicted; bench declares the build step).
-_BM25_IDX: dict[tuple, tuple] = {}
-
-
+@build_step("bm25_index", "documents")
 def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple:
+    """BM25 postings and doc lengths, both checkpointed — the search
+    index both retrieval consumers (text_bm25_topk, sim_rrf_fusion's
+    lexical leg) share."""
     from n2khab_mhq_data_spark.llmdata.pipeline import bm25_index
-    from n2khab_mhq_data_spark.plans.llm import _docs_fingerprint
 
-    for k in [
-        k
-        for k, v in _BM25_IDX.items()
-        if v[0].sparkSession is not spark
-    ]:
-        del _BM25_IDX[k]
-    key = (sf_dir, _docs_fingerprint(sf_dir))
-    idx = _BM25_IDX.get(key)
-    if idx is None:
-        tf, doclen = bm25_index(
-            load(spark, sf_dir, "documents"), "text", "doc_id"
-        )
-        idx = (tf.localCheckpoint(), doclen.localCheckpoint())
-        _BM25_IDX[key] = idx
-    return idx
+    tf, doclen = bm25_index(load(spark, sf_dir, "documents"), "text", "doc_id")
+    return tf.localCheckpoint(), doclen.localCheckpoint()
 
 
 # The retrieval benchmark's fixed query set (terms from the corpus
@@ -367,23 +350,15 @@ def pipeline_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _table_fingerprint(sf_dir: str, table: str) -> str:
-    """md5 prefix over (path, mtime_ns, size) of a source table's parquet
-    file(s) — the shared cache key of every fingerprinted scratch store
-    (was inlined six times; regenerated source data invalidates)."""
+    """md5 prefix over a source table's ``parquet_fingerprint`` — the
+    shared cache key of every fingerprinted scratch store (regenerated
+    source data invalidates)."""
     import hashlib
-    import os
 
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    files = (
-        sorted(os.path.join(p, f) for f in os.listdir(p))
-        if os.path.isdir(p)
-        else [p]
-    )
+    from n2khab_mhq_data_spark.plans import parquet_fingerprint
+
     return hashlib.md5(
-        ";".join(
-            f"{f}:{os.stat(f).st_mtime_ns}:{os.stat(f).st_size}"
-            for f in files
-        ).encode()
+        repr(parquet_fingerprint(sf_dir, table)).encode()
     ).hexdigest()[:16]
 
 
