@@ -87,6 +87,17 @@ def _prebuild_memos(spark, sf_dir: str) -> dict[str, float]:
     return steps
 
 
+def _build_counts(sf_dir: str) -> dict[str, dict[str, int]]:
+    """{step: {"hits": n, "misses": n}} at ``sf_dir``: how often the
+    queries reused each prebuilt step and how often one was (re)built."""
+    from n2khab_mhq_data_spark.plans import BUILD_STEPS
+
+    return {
+        name: {"hits": step.hits[sf_dir], "misses": step.misses[sf_dir]}
+        for name, step in BUILD_STEPS.items()
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # scale label from the LAST path component only (a parent dir that
@@ -236,6 +247,7 @@ def main() -> None:
             "dir": SF1_DIR,
             "total": round(sum(sf1_timings.values()), 3),
             "build_seconds": sf1_build,
+            "build_counts": _build_counts(SF1_DIR),
             "queries": sf1_timings,
         }
 
@@ -287,6 +299,7 @@ def main() -> None:
         # shared-intermediate build steps, timed separately so no
         # query's number hides (or pays) them — see _prebuild_memos
         "build_seconds": build_steps,
+        "build_counts": _build_counts(sf_dir),
         "queries": slowest,
         "queries_file": queries_file,
         "samples_file": samples_file,

@@ -7,16 +7,20 @@ aggregates voorwaarde -> indicator -> criterium -> global status, emitting 4
 result levels (processed/lsvi_mhq/*/result/: lsvi_detail, lsvi_indicator,
 lsvi_criterium, lsvi_globaal).
 
-Spark-first design (SURVEY.md §7.1.5): the rule table is a broadcast
-dimension; evaluation is a when-ladder over comparison operators; the result
-levels are layered aggregations with bool_and + favourable-share. No UDF, no
-driver loop — the whole engine is one Catalyst plan, so it scales to any
-number of plots.
+Spark-first design (SURVEY.md §7.1.5): each plot carries its measurements
+as one voorwaarde -> value map; the rule table is a broadcast dimension
+joined to that row, and each rule looks its value up in the map, which
+completes the detail against the rule set without a self-join. Evaluation
+is a when-ladder over comparison operators. Each result level is one
+aggregation (bool_and + favourable share) of the level below it
+(:func:`roll_up`). No UDF, no driver loop — the whole engine is one
+Catalyst plan, so it scales to any number of plots.
 
 The engine takes the reference's three inputs:
 
 - ``data_habitat`` + ``data_voorwaarden`` — direct condition measurements,
-  fed to :func:`evaluate_conditions`.
+  fed to :func:`evaluate_conditions` as a per-plot map (long-form
+  measurements go through :func:`measurement_map`).
 - ``data_soortenkenmerken`` — species covers matched against *versioned*
   species lists (``geefSoortenlijst``, HT31xx_LSVI.Rmd:85-155), reduced to
   per-plot measurement values by :func:`species_measurements` and then fed
@@ -34,6 +38,8 @@ engine refuses to certify a habitat with unmeasured mandatory conditions.
 Rules marked ``optional = true`` are skipped when unmeasured (R's na.rm
 behavior). R's min-over-empty-set -> Inf warning (HT31xx_LSVI.Rmd:232-239)
 maps to the all-optional-unmeasured case: the indicator status is null.
+A voorwaarde measured twice for one plot has no single status and raises
+(:func:`measurement_map`).
 """
 
 from __future__ import annotations
@@ -166,37 +172,74 @@ def species_measurements(
     )
 
 
+def measurement_map(measurements: DataFrame) -> DataFrame:
+    """Long-form measurements -> the per-plot input of
+    :func:`evaluate_conditions`.
+
+    ``measurements``: plot_id, habitat_type, voorwaarde, value. One
+    ``groupBy`` folds them into one row per (plot_id, habitat_type) whose
+    ``values`` map holds voorwaarde -> value. A NULL voorwaarde names no
+    condition and is left out of the map. A NULL plot_id equals no plot
+    (the SQL join rule), so its map stays empty and each of its rules
+    reads unmeasured; the plot still gets its rule rows.
+
+    A repeated (plot_id, habitat_type, voorwaarde) fails fast, like an
+    unknown operator: one condition with two values has no single status.
+    The check compares the entry count with the distinct-key count before
+    the map is built, so it raises the same error under any
+    ``spark.sql.mapKeyDedupPolicy``.
+    """
+    entry = F.when(
+        F.col("plot_id").isNotNull() & F.col("voorwaarde").isNotNull(),
+        F.struct("voorwaarde", "value"),
+    )
+    per_plot = measurements.groupBy("plot_id", "habitat_type").agg(
+        F.collect_list(entry).alias("entries")
+    )
+    entries = F.col("entries")
+    return per_plot.select(
+        "plot_id",
+        "habitat_type",
+        F.when(
+            F.size(entries) != F.size(F.array_distinct(entries["voorwaarde"])),
+            F.raise_error(
+                F.format_string(
+                    "duplicate LSVI measurement: plot %s, habitat %s",
+                    F.col("plot_id"),
+                    F.col("habitat_type"),
+                )
+            ),
+        )
+        .otherwise(F.map_from_entries(entries))
+        .alias("values"),
+    )
+
+
 def evaluate_conditions(
-    measurements: DataFrame, rules: DataFrame, versie: str | None = None
+    plot_values: DataFrame, rules: DataFrame, versie: str | None = None
 ) -> DataFrame:
     """lsvi_detail: one row per plot x voorwaarde with boolean status.
 
-    ``measurements``: plot_id, habitat_type, voorwaarde, value.
-    Join to the broadcast rule table (optionally pinned to one ``versie``),
-    then evaluate the comparison operator as a when-ladder (vocabulary
-    observed in the LSVI rule tables: >=, >, <=, <, =). An operator outside
-    that vocabulary fails fast at execution time instead of silently
-    evaluating to null. Output carries ``versie`` and ``optional`` through
-    for the roll-up's strict-null semantics.
+    ``plot_values``: plot_id, habitat_type and a ``values`` map
+    voorwaarde -> value, one row per plot (:func:`measurement_map` builds
+    it from long-form measurements). Each row is joined to the broadcast
+    rule table (optionally pinned to one ``versie``) and each rule looks
+    its value up in the map, so the detail is COMPLETE against the rule
+    set: a voorwaarde with no measurement reads NULL, which the operator
+    ladder propagates to a NULL status, and the strict-null roll-up then
+    refuses to certify the plot on partial measurements (the species
+    branch 0-fills against its voorwaarden for the same reason).
+
+    The comparison operator is a when-ladder (vocabulary observed in the
+    LSVI rule tables: >=, >, <=, <, =). An operator outside that
+    vocabulary fails fast at execution time instead of silently
+    evaluating to null. Output carries ``versie`` and ``optional``
+    through for the roll-up's strict-null semantics.
     """
     if versie is not None:
         rules = rules.filter(F.col("versie") == versie)
-    # COMPLETE the detail against the rule set: a mandatory voorwaarde
-    # with no measurement row at all must surface as a NULL-status row,
-    # or the strict-null roll-up never sees it and the plot is
-    # certified on partial measurements (the species branch 0-fills
-    # against its voorwaarden for the same reason). Universe = every
-    # measured (plot, habitat) x that habitat's rules; unmeasured
-    # voorwaarden get value NULL, which the operator ladder naturally
-    # propagates to a NULL status.
-    plots = measurements.select("plot_id", "habitat_type").distinct()
-    universe = plots.join(F.broadcast(rules), on=["habitat_type"])
-    j = universe.join(
-        measurements,
-        on=["plot_id", "habitat_type", "voorwaarde"],
-        how="left",
-    )
-    v, t = F.col("value"), F.col("threshold")
+    j = plot_values.join(F.broadcast(rules), on=["habitat_type"])
+    v, t = F.element_at("values", F.col("voorwaarde")), F.col("threshold")
     status = (
         F.when(F.col("operator") == ">=", v >= t)
         .when(F.col("operator") == ">", v > t)
@@ -226,10 +269,80 @@ def evaluate_conditions(
     )
 
 
+# The roll-up levels in order: level -> (status it reads from the level
+# below, status it writes, its favourable-share column). The indicator
+# level has no share; each level keeps one grain column fewer than the
+# one below it.
+_LEVELS = {
+    "lsvi_indicator": ("status_voorwaarde", "status_indicator", None),
+    "lsvi_criterium": (
+        "status_indicator", "status_criterium", "share_favourable_ind"
+    ),
+    "lsvi_globaal": ("status_criterium", "status_global", "share_favourable"),
+}
+ROLL_UPS = tuple(_LEVELS)
+_GRAIN = ("plot_id", "habitat_type", "criterium", "indicator")
+
+
+def roll_up(
+    child: DataFrame, level: str, by_version: bool = False
+) -> DataFrame:
+    """Build one roll-up ``level`` (one of :data:`ROLL_UPS`) from the
+    level directly below it: the detail for ``lsvi_indicator``, the
+    indicator level for ``lsvi_criterium``, and so on.
+
+    Strict-null: a NULL child status makes the level's status NULL
+    (unknown). On the detail, only a *mandatory* voorwaarde counts;
+    optional ones are skipped when null (bool_and's native skip, R's
+    na.rm). The favourable share averages only the resolved children, but
+    is nulled alongside the status so an unknown never masquerades as a
+    measured share. See :func:`aggregate_levels` for ``by_version``.
+    """
+    status, out, share = _LEVELS[level]
+    depth = ROLL_UPS.index(level)
+    s = F.col(status)
+    unresolved = s.isNull()
+    if depth == 0:
+        # a NULL 'optional' flag must not slip through the strict-null
+        # guard: isNull() & ~NULL is NULL, which bool_or SKIPS — an
+        # unmeasured voorwaarde with an undeclared flag would then be
+        # silently treated as optional and the indicator certified from
+        # the remaining rules (exactly the unmeasured-mandatory
+        # certification this engine exists to prevent). Same fail-fast
+        # posture as the unknown-operator/unknown-stat raises.
+        opt = F.when(
+            F.col("optional").isNull(),
+            F.raise_error(
+                F.lit(
+                    "LSVI roll-up: NULL 'optional' flag on a voorwaarde"
+                    " — declare every rule mandatory (false) or optional"
+                    " (true) in the rules dimension"
+                )
+            ).cast("boolean"),
+        ).otherwise(F.col("optional"))
+        unresolved = unresolved & ~opt
+    unknown = F.bool_or(unresolved)
+    aggs = [
+        F.when(unknown, F.lit(None).cast("boolean"))
+        .otherwise(F.bool_and(s))
+        .alias(out)
+    ]
+    if share is not None:
+        aggs.append(
+            F.when(unknown, F.lit(None).cast("double"))
+            .otherwise(eps_round(F.avg(s.cast("int")), 6))
+            .alias(share)
+        )
+    keys = ["versie"] if by_version else []
+    return child.groupBy(*keys, *_GRAIN[: len(_GRAIN) - depth]).agg(*aggs)
+
+
 def aggregate_levels(
     detail: DataFrame, by_version: bool = False
 ) -> dict[str, DataFrame]:
-    """Roll the detail up through the reference's 4 result levels.
+    """Roll the detail up through the reference's 4 result levels by
+    folding :func:`roll_up` over :data:`ROLL_UPS`, each level built from
+    the one below it.
 
     ``by_version=True`` is REQUIRED whenever the detail spans multiple
     rule versions (``evaluate_conditions(..., versie=None)``): the
@@ -238,68 +351,9 @@ def aggregate_levels(
     version — and the output drops ``versie``, so the mixing would be
     invisible. Single-version callers (versie pinned upstream) may keep
     the default.
-
-    Strict-null roll-up: an unmeasured (null-status) *mandatory* voorwaarde
-    nulls its indicator; a null indicator nulls its criterium; a null
-    criterium nulls the global status. Optional voorwaarden are skipped when
-    null (bool_and's native skip). The favourable shares average only the
-    resolved children (na.rm), but are nulled alongside the status so an
-    unknown never masquerades as a measured share.
     """
-    keys = ["versie"] if by_version else []
-    s = F.col("status_voorwaarde")
-    # a NULL 'optional' flag must not slip through the strict-null
-    # guard: isNull() & ~NULL is NULL, which bool_or SKIPS — an
-    # unmeasured voorwaarde with an undeclared flag would then be
-    # silently treated as optional and the indicator certified from the
-    # remaining rules (exactly the unmeasured-mandatory certification
-    # this engine exists to prevent). Same fail-fast posture as the
-    # unknown-operator/unknown-stat raises.
-    opt = F.when(
-        F.col("optional").isNull(),
-        F.raise_error(
-            F.lit(
-                "aggregate_levels: NULL 'optional' flag on a voorwaarde"
-                " — declare every rule mandatory (false) or optional"
-                " (true) in the rules dimension"
-            )
-        ).cast("boolean"),
-    ).otherwise(F.col("optional"))
-    unknown = F.bool_or(s.isNull() & ~opt)
-    indicator = detail.groupBy(
-        *keys, "plot_id", "habitat_type", "criterium", "indicator"
-    ).agg(
-        F.when(unknown, F.lit(None).cast("boolean"))
-        .otherwise(F.bool_and(s))
-        .alias("status_indicator")
-    )
-
-    si = F.col("status_indicator")
-    ind_unknown = F.bool_or(si.isNull())
-    criterium = indicator.groupBy(
-        *keys, "plot_id", "habitat_type", "criterium"
-    ).agg(
-        F.when(ind_unknown, F.lit(None).cast("boolean"))
-        .otherwise(F.bool_and(si))
-        .alias("status_criterium"),
-        F.when(ind_unknown, F.lit(None).cast("double"))
-        .otherwise(eps_round(F.avg(si.cast("int")), 6))
-        .alias("share_favourable_ind"),
-    )
-
-    sc = F.col("status_criterium")
-    crit_unknown = F.bool_or(sc.isNull())
-    globaal = criterium.groupBy(*keys, "plot_id", "habitat_type").agg(
-        F.when(crit_unknown, F.lit(None).cast("boolean"))
-        .otherwise(F.bool_and(sc))
-        .alias("status_global"),
-        F.when(crit_unknown, F.lit(None).cast("double"))
-        .otherwise(eps_round(F.avg(sc.cast("int")), 6))
-        .alias("share_favourable"),
-    )
-    return {
-        "lsvi_detail": detail,
-        "lsvi_indicator": indicator,
-        "lsvi_criterium": criterium,
-        "lsvi_globaal": globaal,
-    }
+    levels = {"lsvi_detail": detail}
+    child = detail
+    for level in ROLL_UPS:
+        child = levels[level] = roll_up(child, level, by_version)
+    return levels

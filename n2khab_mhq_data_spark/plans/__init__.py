@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import functools
 import time
+from collections import Counter
 from collections.abc import Callable
 from typing import Any, NamedTuple
 
@@ -48,17 +49,21 @@ class _Slot(NamedTuple):
 
 class BuildStep:
     """One registered build step: the wrapped ``(spark, sf_dir)`` body
-    plus its slots, one per sf_dir (see ``build_step``)."""
+    plus its slots, one per sf_dir (see ``build_step``), and per sf_dir
+    how many calls reused the slot (``hits``) or built it (``misses``)."""
 
     def __init__(self, tables: tuple[str, ...], build):
         functools.update_wrapper(self, build)
         self.tables, self.build = tables, build
         self.slots: dict[str, _Slot] = {}
+        self.hits: Counter[str] = Counter()
+        self.misses: Counter[str] = Counter()
 
     def __call__(self, spark: SparkSession, sf_dir: str):
         fp = tuple(parquet_fingerprint(sf_dir, t) for t in self.tables)
         slot = self.slots.get(sf_dir)
         if slot is None or slot.spark is not spark or slot.fingerprint != fp:
+            self.misses[sf_dir] += 1
             # drop the superseded value before rebuilding so its
             # checkpoint blocks are unpinned while the new one builds
             self.slots.pop(sf_dir, None)
@@ -67,6 +72,8 @@ class BuildStep:
             slot = self.slots[sf_dir] = _Slot(
                 spark, fp, value, time.perf_counter() - t0
             )
+        else:
+            self.hits[sf_dir] += 1
         return slot.value
 
 
@@ -93,7 +100,8 @@ def build_step(name: str, *tables: str):
     the session that made it (tests spin up several per process). A
     mismatch rebuilds into the same slot, so a superseded value is never
     left pinned. The slot also records the build's wall seconds, which
-    bench.py reports per step as ``build_seconds``."""
+    bench.py reports per step as ``build_seconds``, beside the step's
+    hit and miss counts (``build_counts``)."""
 
     def deco(build) -> BuildStep:
         step = BUILD_STEPS[name] = BuildStep(tables, build)

@@ -18,8 +18,11 @@ from n2khab_mhq_data_spark.kernels.cover import (
     layer_cover_rollup,
 )
 from n2khab_mhq_data_spark.kernels.lsvi import (
+    ROLL_UPS,
     aggregate_levels,
     evaluate_conditions,
+    measurement_map,
+    roll_up,
     rules_dim,
     species_list_dim,
     species_measurements,
@@ -469,42 +472,50 @@ def _lsvi_levels(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     the shared intermediate of FIVE k7_* consumers (detail, indicator,
     criterium, globaal, crosstab): a real assessment pipeline evaluates
     the rule engine once per campaign, not per report."""
-    # checkpoint the completed DETAIL first, then derive the three
-    # roll-ups FROM the checkpointed detail — checkpointing each level's
-    # raw lineage independently would re-run the whole rule evaluation
-    # four times
-    detail = _lsvi_detail_build(spark, sf_dir).localCheckpoint()
-    return {"lsvi_detail": detail} | {
-        name: df.localCheckpoint()
-        for name, df in aggregate_levels(detail).items()
-        if name != "lsvi_detail"
-    }
+    # aggregate_levels' fold, with a checkpoint per level: each roll-up
+    # is built from the checkpoint of the level below it, so it costs
+    # one aggregation instead of re-running the levels below it
+    child = _lsvi_detail_build(spark, sf_dir).localCheckpoint()
+    levels = {"lsvi_detail": child}
+    for level in ROLL_UPS:
+        child = levels[level] = roll_up(child, level).localCheckpoint()
+    return levels
 
 
-def _lsvi_detail_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    habitat = o.select(
+def _lsvi_habitat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders -> (plot_id, habitat_type): the habitat type each K7 plot
+    is assessed under (SQL twin: the ``habitat`` CTE of
+    _LSVI_PREFIX_SQL)."""
+    return load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("plot_id"),
         F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "ht_rush")
         .when(F.col("o_orderpriority") == "3-MEDIUM", "ht_normal")
         .otherwise("ht_lax")
         .alias("habitat_type"),
     )
-    agg = li.groupBy(F.col("l_orderkey").alias("plot_id")).agg(
-        F.sum("l_quantity").alias("sum_qty"),
-        F.avg("l_discount").alias("avg_disc"),
-        F.count("*").cast("double").alias("n_items"),
+
+
+# the voorwaarden measured directly on each plot's lineitems
+_LSVI_DIRECT = ("sum_qty", "avg_disc", "n_items")
+
+
+def _lsvi_direct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The direct-measurement input of evaluate_conditions: one row per
+    plot with its ``values`` map over _LSVI_DIRECT, built on the row the
+    lineitem aggregation already produces (SQL twin: the ``agg`` and
+    ``m`` CTEs of _LSVI_PREFIX_SQL, which unpivot instead)."""
+    values = F.create_map(
+        F.lit("sum_qty"), F.sum("l_quantity"),
+        F.lit("avg_disc"), F.avg("l_discount"),
+        F.lit("n_items"), F.count("*").cast("double"),
     )
-    measurements = (
-        habitat.join(agg, "plot_id")
-        .unpivot(
-            ["plot_id", "habitat_type"],
-            ["sum_qty", "avg_disc", "n_items"],
-            "voorwaarde",
-            "value",
-        )
-    )
+    agg = load(spark, sf_dir, "lineitem").groupBy(
+        F.col("l_orderkey").alias("plot_id")
+    ).agg(values.alias("values"))
+    return _lsvi_habitat(spark, sf_dir).join(agg, "plot_id")
+
+
+def _lsvi_detail_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scope pin: evaluate_conditions is STRICT since r6 (it completes
     # the detail against the rule set, so an unmeasured mandatory
     # voorwaarde NULLs its roll-up). These queries measure only the
@@ -514,9 +525,11 @@ def _lsvi_detail_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the measured families or every plot would (correctly!) refuse to
     # certify.
     rules = rules_dim(spark, _LSVI_RULES).filter(
-        F.col("voorwaarde").isin("sum_qty", "avg_disc", "n_items")
+        F.col("voorwaarde").isin(*_LSVI_DIRECT)
     )
-    return evaluate_conditions(measurements, rules, versie="3.0")
+    return evaluate_conditions(
+        _lsvi_direct_values(spark, sf_dir), rules, versie="3.0"
+    )
 
 
 @query(
@@ -1088,17 +1101,10 @@ def k7_lsvi_species(spark: SparkSession, sf_dir: str) -> DataFrame:
     + summed cover, absent list species = 0), then pushed through the same
     broadcast-rule evaluation and indicator roll-up as the direct
     measurements. One Catalyst plan end to end — the species list and rule
-    table are both broadcast dims, the only shuffles are the two keyed
+    table are both broadcast dims, the only shuffles are the keyed
     aggregations."""
-    o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    habitat = o.select(
-        F.col("o_orderkey").alias("plot_id"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "ht_rush")
-        .when(F.col("o_orderpriority") == "3-MEDIUM", "ht_normal")
-        .otherwise("ht_lax")
-        .alias("habitat_type"),
-    )
+    habitat = _lsvi_habitat(spark, sf_dir)
     cover = li.join(habitat, F.col("l_orderkey") == F.col("plot_id")).select(
         "plot_id",
         "habitat_type",
@@ -1110,12 +1116,12 @@ def k7_lsvi_species(spark: SparkSession, sf_dir: str) -> DataFrame:
     meas = species_measurements(
         cover, species_list_dim(spark, _LSVI_SPECIES_LIST), versie="3.0"
     )
-    # scope pin (see _lsvi_levels): this branch measures only the
+    # scope pin (see _lsvi_detail_build): this branch measures only the
     # species-characteristics voorwaarden
     rules = rules_dim(spark, _LSVI_RULES).filter(
         F.col("voorwaarde").isin("n_key_species", "cover_key_species")
     )
-    detail = evaluate_conditions(meas, rules, versie="3.0")
+    detail = evaluate_conditions(measurement_map(meas), rules, versie="3.0")
     return aggregate_levels(detail, by_version=True)["lsvi_indicator"]
 
 
@@ -1154,33 +1160,13 @@ def k7_lsvi_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     data via geefInvoervereisten) and roll each up to its global status.
     The version column rides the same broadcast join — assessing N versions
     is one plan, not N pipeline reruns."""
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    habitat = o.select(
-        F.col("o_orderkey").alias("plot_id"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "ht_rush")
-        .when(F.col("o_orderpriority") == "3-MEDIUM", "ht_normal")
-        .otherwise("ht_lax")
-        .alias("habitat_type"),
-    )
-    agg = li.groupBy(F.col("l_orderkey").alias("plot_id")).agg(
-        F.sum("l_quantity").alias("sum_qty"),
-        F.avg("l_discount").alias("avg_disc"),
-        F.count("*").cast("double").alias("n_items"),
-    )
-    measurements = habitat.join(agg, "plot_id").unpivot(
-        ["plot_id", "habitat_type"],
-        ["sum_qty", "avg_disc", "n_items"],
-        "voorwaarde",
-        "value",
-    )
-    # scope pin (see _lsvi_levels): both versions' direct voorwaarden
-    # only — the strict engine would otherwise NULL v3.0's roll-up for
-    # its unmeasured species pair
+    # scope pin (see _lsvi_detail_build): both versions' direct
+    # voorwaarden only — the strict engine would otherwise NULL v3.0's
+    # roll-up for its unmeasured species pair
     rules = rules_dim(spark, _LSVI_RULES).filter(
-        F.col("voorwaarde").isin("sum_qty", "avg_disc", "n_items")
+        F.col("voorwaarde").isin(*_LSVI_DIRECT)
     )
-    detail = evaluate_conditions(measurements, rules)
+    detail = evaluate_conditions(_lsvi_direct_values(spark, sf_dir), rules)
     return aggregate_levels(detail, by_version=True)["lsvi_globaal"]
 
 
@@ -1410,7 +1396,7 @@ def inboveg_lsvi_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         eps_round(F.avg("v"), 6).alias("value")
     )
     detail = evaluate_conditions(
-        meas, rules_dim(spark, _E2_RULES), versie="1.0"
+        measurement_map(meas), rules_dim(spark, _E2_RULES), versie="1.0"
     )
     return aggregate_levels(detail)["lsvi_globaal"]
 

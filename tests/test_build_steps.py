@@ -111,12 +111,22 @@ def test_plain_values_follow_the_same_rules(spark, tmp_path):
         _write_lineitem(spark, sf_dir, [(2, 2)])
         assert plain(spark, sf_dir) == [3]
         assert len(plain.slots) == 1 and plain.slots[sf_dir].seconds >= 0
+        # one reuse; the first build, the new session and the rewrite miss
+        assert (plain.hits[sf_dir], plain.misses[sf_dir]) == (1, 3)
     finally:
         del BUILD_STEPS["test_plain_value"]
 
 
 def test_lsvi_levels_is_eager_and_keeps_its_four_levels(spark, sf_dir):
-    from n2khab_mhq_data_spark.plans.kernels import _lsvi_levels
+    """The build materializes its checkpoints when called, builds each
+    roll-up from the level below it in at most 12 jobs, and its four
+    levels equal the lazy ``aggregate_levels`` fold of the same detail
+    row for row."""
+    from n2khab_mhq_data_spark.kernels.lsvi import aggregate_levels
+    from n2khab_mhq_data_spark.plans.kernels import (
+        _lsvi_detail_build,
+        _lsvi_levels,
+    )
 
     other = spark.newSession()
     levels = []
@@ -124,8 +134,13 @@ def test_lsvi_levels_is_eager_and_keeps_its_four_levels(spark, sf_dir):
         other, "build-step-lsvi",
         lambda: levels.append(_lsvi_levels(other, sf_dir)),
     )
-    assert jobs, "the build materializes its checkpoints when called"
+    assert 0 < len(jobs) <= 12
     assert sorted(levels[0]) == [
         "lsvi_criterium", "lsvi_detail", "lsvi_globaal", "lsvi_indicator",
     ]
-    assert all(df.count() > 0 for df in levels[0].values())
+    lazy = aggregate_levels(_lsvi_detail_build(other, sf_dir))
+    for name, built in levels[0].items():
+        assert built.count() > 0, name
+        assert built.schema == lazy[name].schema, name
+        assert built.exceptAll(lazy[name]).count() == 0, name
+        assert lazy[name].exceptAll(built).count() == 0, name

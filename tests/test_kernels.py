@@ -15,6 +15,7 @@ from n2khab_mhq_data_spark.kernels.cover import (
 from n2khab_mhq_data_spark.kernels.lsvi import (
     aggregate_levels,
     evaluate_conditions,
+    measurement_map,
     rules_dim,
 )
 from n2khab_mhq_data_spark.kernels.tariff import compute_volume, tariff_dim
@@ -52,7 +53,9 @@ def test_lsvi_levels_hand_computed(spark):
         ],
         "plot_id int, habitat_type string, voorwaarde string, value double",
     )
-    levels = aggregate_levels(evaluate_conditions(meas, rules, versie="3.0"))
+    levels = aggregate_levels(
+        evaluate_conditions(measurement_map(meas), rules, versie="3.0")
+    )
 
     ind = {
         (r.plot_id, r.indicator): r.status_indicator
@@ -92,7 +95,7 @@ def test_lsvi_unmeasured_mandatory_voorwaarde_blocks_certification(spark):
         [(1, "ht1", "area", 12.0)],  # 'n' entirely unmeasured
         "plot_id int, habitat_type string, voorwaarde string, value double",
     )
-    detail = evaluate_conditions(meas, rules, versie="3.0")
+    detail = evaluate_conditions(measurement_map(meas), rules, versie="3.0")
     rows = {r.voorwaarde: r.status_voorwaarde for r in detail.collect()}
     assert rows == {"area": True, "n": None}  # completion row present
     glob = aggregate_levels(detail)["lsvi_globaal"].collect()
@@ -251,6 +254,6 @@ def test_aggregate_levels_null_optional_flag_raises(spark):
         [(1, "ht1", "area", 12.0)],  # 'n' unmeasured AND flag undeclared
         "plot_id int, habitat_type string, voorwaarde string, value double",
     )
-    detail = evaluate_conditions(meas, rules, versie="3.0")
+    detail = evaluate_conditions(measurement_map(meas), rules, versie="3.0")
     with _pytest.raises(SparkRuntimeException, match="optional"):
         aggregate_levels(detail)["lsvi_globaal"].collect()

@@ -157,6 +157,7 @@ def _lsvi_fixture(spark, value_rows):
     from n2khab_mhq_data_spark.kernels.lsvi import (
         aggregate_levels,
         evaluate_conditions,
+        measurement_map,
         rules_dim,
     )
 
@@ -172,7 +173,7 @@ def _lsvi_fixture(spark, value_rows):
         value_rows, "plot_id int, habitat_type string, voorwaarde string, value double"
     )
     return aggregate_levels(
-        evaluate_conditions(meas, rules, versie="3.0")
+        evaluate_conditions(measurement_map(meas), rules, versie="3.0")
     )
 
 
@@ -221,6 +222,7 @@ def test_lsvi_unknown_operator_fails_fast(spark):
 
     from n2khab_mhq_data_spark.kernels.lsvi import (
         evaluate_conditions,
+        measurement_map,
         rules_dim,
     )
 
@@ -232,7 +234,9 @@ def test_lsvi_unknown_operator_fails_fast(spark):
         "plot_id int, habitat_type string, voorwaarde string, value double",
     )
     with pytest.raises(Exception, match="unknown LSVI operator"):
-        evaluate_conditions(meas, rules, versie="3.0").collect()
+        evaluate_conditions(
+            measurement_map(meas), rules, versie="3.0"
+        ).collect()
 
 
 def test_lsvi_species_absent_species_scores_zero(spark):
@@ -271,3 +275,90 @@ def test_lsvi_species_absent_species_scores_zero(spark):
         (2, "n_key"): 0.0,
         (2, "cov_key"): 0.0,
     }
+
+
+# --- K7 condition completion: null keys, gaps and duplicates ------------
+
+def _lsvi_detail(spark, value_rows):
+    from n2khab_mhq_data_spark.kernels.lsvi import (
+        evaluate_conditions,
+        measurement_map,
+        rules_dim,
+    )
+
+    rules = rules_dim(
+        spark,
+        [
+            ("3.0", "ht", "c", "i", "vw_a", ">=", 10.0, False),
+            ("3.0", "ht", "c", "i", "vw_b", ">=", 10.0, False),
+        ],
+    )
+    meas = spark.createDataFrame(
+        value_rows,
+        "plot_id int, habitat_type string, voorwaarde string, value double",
+    )
+    return sorted(
+        (
+            (r.plot_id, r.voorwaarde, r.value, r.status_voorwaarde)
+            for r in evaluate_conditions(
+                measurement_map(meas), rules, versie="3.0"
+            ).collect()
+        ),
+        key=repr,
+    )
+
+
+def test_lsvi_null_voorwaarde_measurement_is_ignored(spark):
+    # plot 1's NULL-keyed value matches no rule; plot 2, measured only
+    # under a NULL key, still gets its rule rows, unmeasured
+    assert _lsvi_detail(
+        spark,
+        [
+            (1, "ht", "vw_a", 20.0),
+            (1, "ht", None, 5.0),
+            (1, "ht", "vw_b", 1.0),
+            (2, "ht", None, 20.0),
+        ],
+    ) == [
+        (1, "vw_a", 20.0, True),
+        (1, "vw_b", 1.0, False),
+        (2, "vw_a", None, None),
+        (2, "vw_b", None, None),
+    ]
+
+
+def test_lsvi_null_plot_yields_unmeasured_rule_rows(spark):
+    # a NULL plot_id equals no plot, not even its own measurements
+    assert _lsvi_detail(
+        spark, [(None, "ht", "vw_a", 20.0), (None, "ht", "vw_b", 20.0)]
+    ) == [(None, "vw_a", None, None), (None, "vw_b", None, None)]
+
+
+def test_lsvi_unmeasured_rule_voorwaarde_has_null_status(spark):
+    assert _lsvi_detail(spark, [(1, "ht", "vw_a", 20.0)]) == [
+        (1, "vw_a", 20.0, True),
+        (1, "vw_b", None, None),
+    ]
+
+
+def test_lsvi_duplicate_measurement_fails_fast(spark):
+    # one condition measured twice has no single status: raise, like an
+    # unknown operator, whatever spark.sql.mapKeyDedupPolicy says
+    import pytest
+
+    for policy in ("EXCEPTION", "LAST_WIN"):
+        spark.conf.set("spark.sql.mapKeyDedupPolicy", policy)
+        try:
+            with pytest.raises(
+                Exception, match="duplicate LSVI measurement: plot 1"
+            ):
+                _lsvi_detail(
+                    spark,
+                    [
+                        (1, "ht", "vw_a", 20.0),
+                        (1, "ht", "vw_a", 5.0),
+                        (1, "ht", "vw_b", 20.0),
+                    ],
+                )
+        finally:
+            spark.conf.unset("spark.sql.mapKeyDedupPolicy")
